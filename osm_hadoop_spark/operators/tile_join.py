@@ -132,7 +132,9 @@ def assign_tiles(
     if cover_impl not in ("arrow", "jvm"):
         raise ValueError(f"unknown cover_impl {cover_impl!r} (use 'arrow' or 'jvm')")
     if cover_impl == "jvm":
-        env = src.select(
+        # a zero-vertex way has no envelope and no segment (its slice
+        # length would be -1): it covers no tile, on both kernels
+        env = src.filter(F.size("xs") >= 1).select(
             "_id",
             "xs",
             "ys",
@@ -262,6 +264,9 @@ def assign_tiles(
             if pdf.shape[0] == 0:
                 continue
             xs, ys, counts = _flat_coords(pdf)
+            if not counts.all():
+                # zero-vertex ways cover no tile (the jvm path filters them)
+                pdf, counts = pdf.loc[counts > 0].reset_index(drop=True), counts[counts > 0]
             xmin, ymin, xmax, ymax = envelopes_flat(xs, ys, counts)
             if max_cells is not None:
                 import sys
@@ -281,6 +286,8 @@ def assign_tiles(
                     xs, ys, counts = xs[keep_coord], ys[keep_coord], counts[ok]
                     pdf = pdf.loc[ok].reset_index(drop=True)
                     xmin, ymin, xmax, ymax = xmin[ok], ymin[ok], xmax[ok], ymax[ok]
+            if pdf.shape[0] == 0:
+                continue
             tiles, env_idx = tiles_for_envelope_flat(
                 xmin - buf, ymin - buf, xmax + buf, ymax + buf, zoom, tms=tms_f
             )

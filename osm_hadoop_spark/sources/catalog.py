@@ -170,8 +170,17 @@ class SnapshotCatalog:
         }
         snaps.append(rec)
         os.makedirs(self._tdir(table), exist_ok=True)
-        with open(self._meta_path(table), "w") as f:
-            json.dump(snaps, f, indent=1)
+        # temp file + rename: a crash mid-dump leaves the previous log whole
+        meta = self._meta_path(table)
+        tmp = meta + ".tmp"
+        try:
+            with open(tmp, "w") as f:
+                json.dump(snaps, f, indent=1)
+            os.replace(tmp, meta)
+        except BaseException:
+            if os.path.exists(tmp):
+                os.unlink(tmp)
+            raise
         return rec
 
     def read(self, table: str, snapshot_id: int | None = None) -> DataFrame:

@@ -97,6 +97,27 @@ def test_snapshot_time_travel(spark, tmp_path):
     assert cat.read("t", snapshot_id=s1["snapshot_id"]).count() == 5
 
 
+def test_snapshot_log_survives_crash_mid_write(spark, tmp_path, monkeypatch):
+    """A metadata write that dies half-way leaves the previous snapshot log
+    and its data readable."""
+    import json
+
+    cat = SnapshotCatalog(spark, str(tmp_path / "w3"), use_iceberg=False)
+    s1 = cat.write(spark.range(5).withColumnRenamed("id", "v"), "t")
+
+    def dump_then_crash(obj, f, **kw):
+        f.write('[{"snapshot_id"')
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", dump_then_crash)
+    with pytest.raises(OSError, match="disk full"):
+        cat.write(spark.range(9).withColumnRenamed("id", "v"), "t")
+    monkeypatch.undo()
+    assert [s["snapshot_id"] for s in cat.snapshot_log("t")] == [s1["snapshot_id"]]
+    assert cat.read("t").count() == 5
+    assert not [n for n in os.listdir(tmp_path / "w3" / "t") if n.endswith(".tmp")]
+
+
 @pytest.fixture(scope="module")
 def skew_docs(spark):
     return gen_documents(spark, 3000, seed=42, skew=True).cache()

@@ -431,6 +431,39 @@ def test_jvm_refine_single_vertex_point_in_box(spark):
     assert got == base
 
 
+@pytest.mark.parametrize("refine", [True, False])
+@pytest.mark.parametrize("buffer_deg", [0.0, 0.01])
+def test_empty_way_covers_no_tile_on_both_kernels(spark, refine, buffer_deg):
+    """A zero-vertex way emits no pair and does not fail the batch, on both
+    kernels; the normal way next to it keeps its pairs."""
+    df = spark.createDataFrame(
+        [(1, [], []), (2, [10.0, 10.3], [20.0, 20.2])],
+        "way_id long, xs array<double>, ys array<double>",
+    )
+    got = {}
+    for impl in ("arrow", "jvm"):
+        got[impl] = sorted(
+            (r["way_id"], r["tile_id"])
+            for r in assign_tiles(df, zoom=12, tms=False, refine=refine,
+                                  buffer_deg=buffer_deg, cover_impl=impl).collect()
+        )
+    assert got["arrow"] == got["jvm"]
+    assert {w for w, _ in got["arrow"]} == {2}
+
+
+def test_max_cells_guard_dropping_a_whole_batch(spark):
+    """A batch whose every way exceeds the cell cap emits nothing, on both
+    kernels, instead of failing the task."""
+    df = spark.createDataFrame(
+        [(1, [-170.0, 170.0], [-80.0, 80.0])],
+        "way_id long, xs array<double>, ys array<double>",
+    ).coalesce(1)
+    for impl in ("arrow", "jvm"):
+        got = assign_tiles(df, zoom=12, tms=False, max_cells_per_geom=16,
+                           cover_impl=impl).collect()
+        assert got == [], impl
+
+
 def test_jvm_ytile_scan_matches_numpy(spark):
     """ulp-parity methodology (module docstring of __spark_entry__): every
     latitude the driver derivations can produce must get the same y-tile
